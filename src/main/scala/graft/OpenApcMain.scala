@@ -167,10 +167,11 @@ object OpenApcMain {
   /** Rebuild-redeploy reload (update_olap.sh:12-16 parity without a server
     * restart): drop + unpersist every registration, invalidate Spark's
     * cached file listings/plans for the rewritten parquet, and re-register
-    * fresh reads. Requests racing the swap see either the old or the new
-    * registry entry — never a half-state — because the registry swap is
-    * per-cube atomic (TrieMap put) and the old cached data stays valid
-    * until its unpersist.
+    * fresh reads. The swap is NOT atomic: `unregisterAll()` empties the
+    * registry before `registerAll` puts the fresh reads back, so a request
+    * that lands in between gets `404 no such cube`. Each registration on
+    * its own is atomic (TrieMap put), so a request that finds its cube
+    * sees either the old or the new entry, never a mix of the two.
     */
   def reload(spark: SparkSession, registry: CubeRegistry, cubesDir: String,
       manifest: Seq[graft.etl.ManifestEntry], cache: Boolean = true): Unit = {

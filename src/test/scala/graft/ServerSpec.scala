@@ -397,4 +397,60 @@ class ServerSpec extends SparkSpec {
     // nocache=1 bypasses the cache but still serves the same content
     assert(get(path + "&nocache=1")._2 == first._2)
   }
+
+  test("no per-response TCP stall: keep-alive round trips take < 10 ms at the median") {
+    // headers and body leave as two small segments; with Nagle on, the
+    // body waits for the client's delayed ACK of the headers, which sets
+    // a floor of ~40 ms on EVERY response, replays and errors alike
+    def medianMs(path: String, n: Int, expectCode: Int): Double = {
+      val ms = (1 to n).map { _ =>
+        val t0 = System.nanoTime()
+        // sequential HttpURLConnections to one host share one keep-alive
+        // socket once each body is read to the end
+        val c = URI.create(s"http://localhost:${server.boundPort}$path").toURL
+          .openConnection().asInstanceOf[java.net.HttpURLConnection]
+        val code = c.getResponseCode
+        val in = if (code >= 400) c.getErrorStream else c.getInputStream
+        in.readAllBytes()
+        in.close()
+        assert(code == expectCode, s"$path -> $code")
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      ms(ms.size / 2)
+    }
+    val cachedPath = "/cube/lineitem/aggregate?drilldown=l_linestatus"
+    assert(get(cachedPath)._1 == 200) // prime the response cache
+    val replay = medianMs(cachedPath, 50, 200)
+    val notFound = medianMs("/no/such/endpoint", 10, 404)
+    info(f"replay p50 $replay%.2f ms, 404 p50 $notFound%.2f ms")
+    assert(replay < 10.0, f"cached replay p50 $replay%.1f ms")
+    assert(notFound < 10.0, f"404 p50 $notFound%.1f ms")
+  }
+
+  test("stop() shuts down the request pool; its threads are non-daemon while serving") {
+    import scala.jdk.CollectionConverters._
+    def poolThreads: Set[Thread] = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName.startsWith("graft-http-")).toSet
+    val before = poolThreads
+    val s = new GraftServer(registry)
+    s.start()
+    val threads = try {
+      // a fixed pool starts one thread per task until it is full
+      (1 to 4).foreach { _ =>
+        val req = HttpRequest.newBuilder(
+          URI.create(s"http://localhost:${s.boundPort}/cubes")).GET().build()
+        assert(client.send(req, HttpResponse.BodyHandlers.ofString()).statusCode() == 200)
+      }
+      poolThreads -- before
+    } finally s.stop()
+    assert(threads.size == 4, threads.map(_.getName))
+    // one server's pool: graft-http-<server id>-<n>
+    assert(threads.map(_.getName.split('-')(2)).size == 1, threads.map(_.getName))
+    // a served-only JVM (OpenApcMain.main) lives on these threads
+    assert(threads.forall(!_.isDaemon))
+    // stop() awaited the pool's termination; a worker may still be
+    // returning from its run loop, so give it a moment to end
+    threads.foreach(_.join(2000))
+    assert(threads.forall(!_.isAlive), threads.filter(_.isAlive).map(_.getName))
+  }
 }
